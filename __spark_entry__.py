@@ -381,8 +381,8 @@ def q_cdc_ivm_agg(spark, sf_dir):
     payload's first character — updates MIGRATE rows between groups) is
     maintained from ``read_changes(include_old=True)`` before/after images
     instead of being recomputed: retract-from-old-group + apply-to-new-group
-    contributions, ONE map-side-combined shuffle, pruned read_keys probe,
-    keyed merge — O(changed) end-to-end. MIN/MAX are maintained with the r6
+    contributions, ONE map-side-combined shuffle, one read and one rewrite
+    of the touched view buckets — O(changed) end-to-end. MIN/MAX are maintained with the r6
     EXTREMA RESERVE (reserve_r=4: per-group arrays of the 4 extremal
     values, bootstrapped by bootstrap_agg): a retraction of the stored
     extremum consumes the reserve instead of triggering the group-filtered

@@ -96,9 +96,10 @@ def maintain_vocab(
     ``word``, carrying ``count_col`` = document frequency): everything that
     happened to ``base_table`` since ``from_version`` folds into the view
     at O(changed docs × their tokens) — changelog read (manifest-pruned)
-    → :func:`vocab_deltas` → pruned ``read_keys`` probe + keyed merge
-    (words reaching df=0 are deleted, new words appear). The single-
-    maintainer contract of ``maintain_agg`` applies. Reference analog:
+    → :func:`vocab_deltas` → one read and one rewrite of the touched
+    vocabulary buckets (words reaching df=0 are deleted, new words
+    appear). The single-maintainer contract of ``maintain_agg`` applies.
+    Reference analog:
     consumers apply only the appended log segment, never re-reading the
     topic (/root/reference/kafka/client.go:220-233) — this is that cost
     model for a derived vocabulary."""

@@ -617,8 +617,9 @@ def maintain_exact_dedup(
     ``h`` (md5 of text) carrying ``n_copies`` and ``keeper_id`` =
     MIN(doc id): everything that happened to ``base_table`` since
     ``from_version`` folds in at O(changed docs) — changelog read
-    (manifest-pruned) → :func:`exact_dedup_deltas` → pruned ``read_keys``
-    probe + keyed merge; hashes reaching 0 copies are deleted. The keeper
+    (manifest-pruned) → :func:`exact_dedup_deltas` → one read and one
+    rewrite of the touched hash buckets; hashes reaching 0 copies are
+    deleted. The keeper
     follows the MIN rule with the extrema RESERVE (default ``reserve_r=4``,
     bootstrap via :func:`bootstrap_exact_dedup`): the ``_rsv_keeper_id``
     array carries the group's R smallest ids, so deleting a keeper while

@@ -19,10 +19,14 @@ sum/count) maintained in a keyed :class:`SnapshotTable`:
    task. Updates that MIGRATE a row between groups are handled naturally
    (retract from old group, apply to new).
 3. :func:`apply_agg_deltas` folds the per-group deltas into the aggregate
-   table: existing group rows are fetched with the bucket/row-group-pruned
-   ``read_keys`` probe (O(changed groups), not O(groups)), new totals are
-   old + delta, groups whose row count reaches zero are deleted, and the
-   result lands as a normal keyed ``merge`` (touched buckets only).
+   table in ONE bucket rewrite (``SnapshotTable.rewrite_buckets``): the
+   deltas are materialized once, the view buckets they touch are read
+   once and full-outer-joined with them (groups without a delta keep
+   their row, new totals are old + delta, groups whose row count reaches
+   zero are dropped), and the result is written back with one manifest
+   commit — O(touched view buckets), no probe, no second pass over the
+   deltas (the online-aggregation rule: fold contributions straight into
+   the stored aggregate, with no intermediate materialization).
 
 MIN/MAX are maintained with the standard BOUNDED-RECOMPUTE rule (they are
 not distributive under deletion — retracting the current extremum requires
@@ -272,8 +276,11 @@ def apply_agg_deltas(
 
     ``count_col``: the table's COUNT(*) column; ``sum_map``/``min_map``/
     ``max_map``: base column -> aggregate-table column (e.g. ``{'n':
-    'sum_n'}``). Existing group rows come from the pruned ``read_keys``
-    probe; groups whose new count is 0 are deleted (an aggregate table
+    'sum_n'}``). One ``rewrite_buckets`` call: the deltas are materialized
+    once (the touched-bucket set rides that job), the touched view buckets
+    are read once and full-outer-joined with them, and the folded buckets
+    are written with one manifest commit. Rows without a delta keep every
+    column; groups whose new count is 0 are dropped (an aggregate table
     never holds empty groups — matching a from-scratch GROUP BY, which has
     no row for them). Idempotent per ``epoch_id`` like any other merge.
     Maintained sums follow ``COALESCE(SUM(c), 0)`` — an all-null group
@@ -283,10 +290,10 @@ def apply_agg_deltas(
     MIN/MAX fold incrementally except for groups where a retraction reaches
     the stored extremum AND the epoch's applies don't re-establish it (see
     module docstring); those are recomputed with one column-pruned scan of
-    ``base_table`` filtered to the flagged groups. Returns the merge stats
-    plus ``recomputed_groups`` (0 on the pure-incremental path) and — when
-    the ``read_keys`` probe ran — ``probe_key_pushdown`` (whether the probe
-    stayed under the row-group IN-pushdown cap; the no-silent-caps rule).
+    ``base_table`` filtered to the flagged groups, inside the rewrite and
+    only on epochs whose deltas retract something. Returns the rewrite
+    stats (``touched_buckets`` — the view buckets read and rewritten) plus
+    ``recomputed_groups`` (0 on the pure-incremental path).
 
     With ``reserve_r=R > 0`` (``deltas`` must come from the same
     ``reserve_r``) the table additionally carries ``_rsv_<agg_col>`` reserve
@@ -295,8 +302,8 @@ def apply_agg_deltas(
     only when R extremum-side deletions hit a group without replenishment.
     A table bootstrapped without reserve columns upgrades in place: its
     rows fold legacy-incrementally until an epoch retracts from them, which
-    flags a one-time recompute that installs the group's reserve (the merge
-    schema-evolves the new columns).
+    flags a one-time recompute that installs the group's reserve (the
+    rewrite schema-evolves the new columns).
     """
     sum_map = dict(sum_map or {})
     min_map = dict(min_map or {})
@@ -304,11 +311,9 @@ def apply_agg_deltas(
     if (min_map or max_map) and base_table is None:
         raise ValueError("min_map/max_map require base_table for the bounded recompute path")
     gcols = list(agg_table.key_cols)
-    # O(changed groups) rows: materialize once so the read_keys probe, the
-    # join, and the merge's own passes don't re-run the changelog diff +
-    # delta shuffle behind it. r7: the append-mostly fast-path probe ("did
-    # ANYTHING retract this epoch?") rides the same materialization as an
-    # Observation metric instead of a separate scan job afterwards.
+    # the append-mostly fast-path probe ("did ANYTHING retract this
+    # epoch?") rides the rewrite's materialization of the deltas as an
+    # Observation metric instead of a separate scan job
     retr_obs = None
     if min_map or max_map:
         from pyspark.sql import Observation
@@ -327,198 +332,199 @@ def apply_agg_deltas(
         deltas = deltas.observe(
             retr_obs, F.sum(any_retract.cast("long")).alias("n_retract_groups")
         )
-    deltas = deltas.localCheckpoint(eager=True)
-    # both sides are O(changed groups): the probe reads only matching
-    # buckets/row groups and returns at most one row per changed group, so
-    # it broadcasts; every delta row must survive the join (its group may
-    # not exist yet), hence deltas-left
-    probe_stats: dict = {}
-    try:
-        existing = agg_table.read_keys(deltas.select(*gcols), stats_out=probe_stats)
-    except TypeError:  # duck-typed adapter without the stats hook
-        existing = agg_table.read_keys(deltas.select(*gcols))
     dirs = [(b, a, True) for b, a in min_map.items()] + [
         (b, a, False) for b, a in max_map.items()
     ]
-    if reserve_r:
-        # reserve-array element types come from the delta arrays; a legacy
-        # table (bootstrapped without reserve columns) reads null reserves
-        # and upgrades in place — the merge schema-evolves the new columns
-        for base_c, agg_c, lo in dirs:
-            at = deltas.schema[f"_aL_{base_c}" if lo else f"_aH_{base_c}"].dataType
-            if f"_rsv_{agg_c}" not in existing.columns:
-                existing = existing.withColumn(f"_rsv_{agg_c}", F.lit(None).cast(at))
-    j = deltas.join(F.broadcast(existing), on=gcols, how="left")
-    new_count = (F.coalesce(F.col(count_col), F.lit(0)) + F.col("_d_count")).cast("long")
-    new_sums = [
-        (F.coalesce(F.col(agg_c), F.lit(0)) + F.col(f"_d_{base_c}")).alias(agg_c)
-        for base_c, agg_c in sum_map.items()
-    ]
-    new_minmax, need_rc = [], []
-    if reserve_r:
-        old_count = F.coalesce(F.col(count_col), F.lit(0))
-        # every old row of the group retracted this epoch: the group is
-        # REBORN from its applied values — the R extremal applies are its
-        # exact new reserve, no old state can leak into the extremum
-        reborn = old_count == F.col("_d_retract_rows")
-    for base_c, agg_c, lo in dirs if reserve_r else ():
-        aK = F.col(f"_aL_{base_c}" if lo else f"_aH_{base_c}")
-        rK = F.col(f"_rL_{base_c}" if lo else f"_rH_{base_c}")
-        nr = F.col(f"_nr_{base_c}")
-        srsv = F.col(f"_rsv_{agg_c}")
-        stored = F.col(agg_c)
-        at = deltas.schema[f"_aL_{base_c}" if lo else f"_aH_{base_c}"].dataType
-        # multiset-remove the R extremal retracted values from the stored
-        # reserve (one occurrence each — array_remove would eat tied
-        # duplicates); F.slice(aK, 1, 0) is a typed empty array
-        after_rm = F.aggregate(rK, F.coalesce(srsv, F.slice(aK, 1, 0)), _remove_first)
-        # watermark = the reserve's inner edge: an insert beyond it may
-        # have unseen peers outside the reserve, so it must stay outside —
-        # absorbing it would let a later deletion surface a false extremum
-        m = (F.array_max if lo else F.array_min)(after_rm)
-        accepted = F.filter(aK, (lambda a: a <= m) if lo else (lambda a: a >= m))
-        merged = F.slice(_sorted_dir(F.concat(after_rm, accepted), lo), 1, reserve_r)
-        legacy = srsv.isNull() & F.col(count_col).isNotNull() & ~reborn
-        fresh = (
-            F.when(reborn, aK)
-            .when(F.size(after_rm) > 0, merged)
-            # old rows exist but none holds a value (stored extremum null):
-            # the applies seed the reserve exactly
-            .when(stored.isNull(), aK)
-            # reserve exhausted by deletions: recompute (flagged) refills
-            .otherwise(F.lit(None).cast(at))
-        )
-        new_minmax += [
+    stats = {"recomputed": 0}
+
+    def combine(current: DataFrame | None, d: DataFrame, _n: int) -> DataFrame:
+        if current is None:
+            raise ValueError("aggregate table has no recorded schema: bootstrap it first")
+        if reserve_r:
+            # reserve-array element types come from the delta arrays; a legacy
+            # table (bootstrapped without reserve columns) reads null reserves
+            # and upgrades in place — the rewrite schema-evolves the new columns
+            for base_c, agg_c, lo in dirs:
+                at = d.schema[f"_aL_{base_c}" if lo else f"_aH_{base_c}"].dataType
+                if f"_rsv_{agg_c}" not in current.columns:
+                    current = current.withColumn(f"_rsv_{agg_c}", F.lit(None).cast(at))
+        # the touched view buckets against the deltas: a group with no delta
+        # row keeps its row as is, a delta without a stored group is a new one
+        j = d.drop("_bucket").withColumn("_hit", F.lit(True)).join(current, on=gcols, how="full_outer")
+        hit = F.coalesce(F.col("_hit"), F.lit(False))
+        new_vals = {count_col: (F.coalesce(F.col(count_col), F.lit(0)) + F.col("_d_count")).cast("long")}
+        for base_c, agg_c in sum_map.items():
+            new_vals[agg_c] = F.coalesce(F.col(agg_c), F.lit(0)) + F.col(f"_d_{base_c}")
+        need_rc = []
+        if reserve_r:
+            old_count = F.coalesce(F.col(count_col), F.lit(0))
+            # every old row of the group retracted this epoch: the group is
+            # REBORN from its applied values — the R extremal applies are its
+            # exact new reserve, no old state can leak into the extremum
+            reborn = old_count == F.col("_d_retract_rows")
+        for base_c, agg_c, lo in dirs if reserve_r else ():
+            aK = F.col(f"_aL_{base_c}" if lo else f"_aH_{base_c}")
+            rK = F.col(f"_rL_{base_c}" if lo else f"_rH_{base_c}")
+            nr = F.col(f"_nr_{base_c}")
+            srsv = F.col(f"_rsv_{agg_c}")
+            stored = F.col(agg_c)
+            at = d.schema[f"_aL_{base_c}" if lo else f"_aH_{base_c}"].dataType
+            # multiset-remove the R extremal retracted values from the stored
+            # reserve (one occurrence each — array_remove would eat tied
+            # duplicates); F.slice(aK, 1, 0) is a typed empty array
+            after_rm = F.aggregate(rK, F.coalesce(srsv, F.slice(aK, 1, 0)), _remove_first)
+            # watermark = the reserve's inner edge: an insert beyond it may
+            # have unseen peers outside the reserve, so it must stay outside —
+            # absorbing it would let a later deletion surface a false extremum
+            m = (F.array_max if lo else F.array_min)(after_rm)
+            accepted = F.filter(aK, (lambda a: a <= m) if lo else (lambda a: a >= m))
+            merged = F.slice(_sorted_dir(F.concat(after_rm, accepted), lo), 1, reserve_r)
+            legacy = srsv.isNull() & F.col(count_col).isNotNull() & ~reborn
+            fresh = (
+                F.when(reborn, aK)
+                .when(F.size(after_rm) > 0, merged)
+                # old rows exist but none holds a value (stored extremum null):
+                # the applies seed the reserve exactly
+                .when(stored.isNull(), aK)
+                # reserve exhausted by deletions: recompute (flagged) refills
+                .otherwise(F.lit(None).cast(at))
+            )
             # legacy rows fold least/greatest until a retraction epoch
             # flags their one-time reserve-installing recompute
-            F.when(legacy, (F.least if lo else F.greatest)(stored, F.get(aK, 0)))
-            .otherwise(F.get(fresh, 0))
-            .alias(agg_c),
-            F.when(legacy, F.lit(None).cast(at)).otherwise(fresh).alias(f"_rsv_{agg_c}"),
-        ]
-        # a truncated retraction list whose unprocessed tail (all at-or-
-        # beyond the R-th retracted value) could still reach the surviving
-        # reserve: conservative flag (an epoch retracting > R values
-        # straddling ONE group's reserve — rare by construction)
-        trunc = (
-            (nr > reserve_r)
-            & (F.size(after_rm) > 0)
-            & ((F.get(rK, reserve_r - 1) <= m) if lo else (F.get(rK, reserve_r - 1) >= m))
-        )
-        # legacy rows flag under the r5 hit&miss rule (the delta arrays are
-        # extremum-first, so element 0 IS the exact applied/retracted
-        # extremum even when truncated): a retraction reaching the stored
-        # extremum without the applies re-establishing it — the flagged
-        # recompute then installs the group's reserve
-        a0, r0 = F.get(aK, 0), F.get(rK, 0)
-        legacy_hit = (r0 <= stored) if lo else (r0 >= stored)
-        legacy_miss = a0.isNull() | ((a0 > stored) if lo else (a0 < stored))
-        need_rc.append(
-            (~reborn)
-            & (
-                (legacy & stored.isNotNull() & r0.isNotNull() & legacy_hit & legacy_miss)
-                | (srsv.isNotNull() & (F.size(after_rm) == 0) & stored.isNotNull())
-                | (srsv.isNotNull() & trunc)
+            new_vals[agg_c] = F.when(
+                legacy, (F.least if lo else F.greatest)(stored, F.get(aK, 0))
+            ).otherwise(F.get(fresh, 0))
+            new_vals[f"_rsv_{agg_c}"] = F.when(legacy, F.lit(None).cast(at)).otherwise(fresh)
+            # a truncated retraction list whose unprocessed tail (all at-or-
+            # beyond the R-th retracted value) could still reach the surviving
+            # reserve: conservative flag (an epoch retracting > R values
+            # straddling ONE group's reserve — rare by construction)
+            trunc = (
+                (nr > reserve_r)
+                & (F.size(after_rm) > 0)
+                & ((F.get(rK, reserve_r - 1) <= m) if lo else (F.get(rK, reserve_r - 1) >= m))
             )
+            # legacy rows flag under the r5 hit&miss rule (the delta arrays are
+            # extremum-first, so element 0 IS the exact applied/retracted
+            # extremum even when truncated): a retraction reaching the stored
+            # extremum without the applies re-establishing it — the flagged
+            # recompute then installs the group's reserve
+            a0, r0 = F.get(aK, 0), F.get(rK, 0)
+            legacy_hit = (r0 <= stored) if lo else (r0 >= stored)
+            legacy_miss = a0.isNull() | ((a0 > stored) if lo else (a0 < stored))
+            need_rc.append(
+                (~reborn)
+                & (
+                    (legacy & stored.isNotNull() & r0.isNotNull() & legacy_hit & legacy_miss)
+                    | (srsv.isNotNull() & (F.size(after_rm) == 0) & stored.isNotNull())
+                    | (srsv.isNotNull() & trunc)
+                )
+            )
+        for base_c, agg_c, lo in () if reserve_r else dirs:
+            stored = F.col(agg_c)
+            a = F.col(f"_a_min_{base_c}" if lo else f"_a_max_{base_c}")
+            r = F.col(f"_r_min_{base_c}" if lo else f"_r_max_{base_c}")
+            # least/greatest skip nulls: a new or all-null group takes the
+            # applied extremum directly
+            new_vals[agg_c] = F.least(stored, a) if lo else F.greatest(stored, a)
+            # a retraction at the stored extremum invalidates it UNLESS the
+            # applies re-establish it (applied_min <= stored_min ⇒ every
+            # surviving old row >= stored_min >= applied_min ⇒ new min is
+            # exactly applied_min, already what least() yields)
+            hit_ext = (r <= stored) if lo else (r >= stored)
+            miss = a.isNull() | ((a > stored) if lo else (a < stored))
+            need_rc.append(stored.isNotNull() & r.isNotNull() & hit_ext & miss)
+        rc_flag = F.lit(False)
+        for n in need_rc:
+            rc_flag = rc_flag | n
+        # a row with a delta takes the folded values; any other column it
+        # carries is nulled (full-row replace); rows without one stay as is
+        types = dict(current.dtypes)
+        other = [c for c in current.columns if c not in gcols and c not in new_vals]
+        updated = j.select(
+            *gcols,
+            *[F.when(hit, e).otherwise(F.col(c)).alias(c) for c, e in new_vals.items()],
+            *[F.when(hit, F.lit(None).cast(types[c])).otherwise(F.col(c)).alias(c) for c in other],
+            (hit & rc_flag).alias("_rc"),
         )
-    for base_c, agg_c, lo in () if reserve_r else dirs:
-        stored = F.col(agg_c)
-        a = F.col(f"_a_min_{base_c}" if lo else f"_a_max_{base_c}")
-        r = F.col(f"_r_min_{base_c}" if lo else f"_r_max_{base_c}")
-        # least/greatest skip nulls: a new or all-null group takes the
-        # applied extremum directly
-        new_minmax.append((F.least(stored, a) if lo else F.greatest(stored, a)).alias(agg_c))
-        # a retraction at the stored extremum invalidates it UNLESS the
-        # applies re-establish it (applied_min <= stored_min ⇒ every
-        # surviving old row >= stored_min >= applied_min ⇒ new min is
-        # exactly applied_min, already what least() yields)
-        hit = (r <= stored) if lo else (r >= stored)
-        miss = a.isNull() | ((a > stored) if lo else (a < stored))
-        need_rc.append(stored.isNotNull() & r.isNotNull() & hit & miss)
-    rc_flag = F.lit(False)
-    for n in need_rc:
-        rc_flag = rc_flag | n
-    updated = j.select(
-        *gcols, new_count.alias(count_col), *new_sums, *new_minmax, rc_flag.alias("_rc")
-    )
-    recomputed = 0
-    # Append-mostly fast path (the common CDC-ingest epoch): a group can
-    # only be flagged if SOMETHING was retracted (`need_rc` requires a
-    # non-null retracted extremum) — the Observation riding the deltas
-    # checkpoint above already answered that with zero extra jobs.
-    has_retraction = bool(retr_obs.get["n_retract_groups"] or 0) if retr_obs else False
-    if (min_map or max_map) and has_retraction:
-        # O(changed groups) rows — pin them so the flag collect, the
-        # recompute join, and the merge share one evaluation; the flagged-
-        # group COUNT rides the same job as another Observation (r7 — it
-        # was a separate count job per epoch)
-        from pyspark.sql import Observation
+        # Append-mostly fast path (the common CDC-ingest epoch): a group can
+        # only be flagged if SOMETHING was retracted (`need_rc` requires a
+        # non-null retracted extremum) — the Observation riding the deltas'
+        # materialization already answered that with zero extra jobs.
+        has_retraction = bool(retr_obs.get["n_retract_groups"] or 0) if retr_obs else False
+        stats["recomputed"] = 0
+        if has_retraction:
+            # O(touched buckets) rows — pin them so the flag filter, the
+            # recompute join, and the write share one evaluation; the
+            # flagged-group COUNT rides the same job as another Observation
+            from pyspark.sql import Observation
 
-        rc_obs = Observation("ivm_flagged")
-        updated = updated.observe(
-            rc_obs,
-            F.sum((F.col("_rc") & (F.col(count_col) > 0)).cast("long")).alias("n_flagged"),
-        ).localCheckpoint(eager=True)
-        flagged = updated.filter(F.col("_rc") & (F.col(count_col) > 0)).select(*gcols)
-        recomputed = int(rc_obs.get["n_flagged"] or 0)
-        if recomputed:
-            # ground-truth extrema for just the flagged groups: ONE
-            # column-pruned scan of the base table, group-filtered by a
-            # broadcast semi-join (O(flagged groups' rows) after the scan;
-            # the scan itself reads only the group + value columns)
-            base_vals = list(dict.fromkeys([*min_map, *max_map]))
-            scoped = (
-                base_table.read()
-                .select(*gcols, *base_vals)
-                .join(F.broadcast(flagged), on=gcols, how="left_semi")
-            )
-            if reserve_r:
-                # rebuild the R-deep reserves exactly (salted two-level —
-                # a flagged Zipf-hot group's buffer stays R-bounded)
-                s1 = [
-                    F.slice(_sorted_dir(F.collect_list(b), lo), 1, reserve_r).alias(f"_p_{a}")
-                    for b, a, lo in dirs
-                ]
-                s2 = [
-                    F.slice(
-                        _sorted_dir(F.flatten(F.collect_list(f"_p_{a}")), lo), 1, reserve_r
-                    ).alias(f"_rcv_{a}")
-                    for b, a, lo in dirs
-                ]
-                rc = (
-                    scoped.groupBy(*gcols, F.spark_partition_id().alias("_slt"))
-                    .agg(*s1)
-                    .groupBy(*gcols)
-                    .agg(*s2)
+            rc_obs = Observation("ivm_flagged")
+            updated = updated.observe(
+                rc_obs,
+                F.sum((F.col("_rc") & (F.col(count_col) > 0)).cast("long")).alias("n_flagged"),
+            ).localCheckpoint(eager=True)
+            flagged = updated.filter(F.col("_rc") & (F.col(count_col) > 0)).select(*gcols)
+            stats["recomputed"] = int(rc_obs.get["n_flagged"] or 0)
+            if stats["recomputed"]:
+                # ground-truth extrema for just the flagged groups: ONE
+                # column-pruned scan of the base table, group-filtered by a
+                # broadcast semi-join (O(flagged groups' rows) after the scan;
+                # the scan itself reads only the group + value columns)
+                base_vals = list(dict.fromkeys([*min_map, *max_map]))
+                scoped = (
+                    base_table.read()
+                    .select(*gcols, *base_vals)
+                    .join(F.broadcast(flagged), on=gcols, how="left_semi")
                 )
-                take_rc = []
-                for _b, a, _lo in dirs:
-                    take_rc += [
-                        F.when(F.col("_rc"), F.get(F.col(f"_rcv_{a}"), 0))
-                        .otherwise(F.col(a))
-                        .alias(a),
-                        F.when(F.col("_rc"), F.col(f"_rcv_{a}"))
-                        .otherwise(F.col(f"_rsv_{a}"))
-                        .alias(f"_rsv_{a}"),
+                if reserve_r:
+                    # rebuild the R-deep reserves exactly (salted two-level —
+                    # a flagged Zipf-hot group's buffer stays R-bounded)
+                    s1 = [
+                        F.slice(_sorted_dir(F.collect_list(b), lo), 1, reserve_r).alias(f"_p_{a}")
+                        for b, a, lo in dirs
                     ]
-                replaced = {a for _, a, _ in dirs} | {f"_rsv_{a}" for _, a, _ in dirs}
-            else:
-                rc = scoped.groupBy(*gcols).agg(
-                    *[F.min(b).alias(f"_rc_{a}") for b, a in min_map.items()],
-                    *[F.max(b).alias(f"_rc_{a}") for b, a in max_map.items()],
-                )
-                take_rc = [
-                    F.when(F.col("_rc"), F.col(f"_rc_{a}")).otherwise(F.col(a)).alias(a)
-                    for a in [*min_map.values(), *max_map.values()]
-                ]
-                replaced = {*min_map.values(), *max_map.values()}
-            keep = [c for c in updated.columns if c not in replaced]
-            updated = updated.join(F.broadcast(rc), on=gcols, how="left").select(*keep, *take_rc)
-    updated = updated.drop("_rc")
-    upserts = updated.filter(F.col(count_col) > 0)
-    deletes = updated.filter(F.col(count_col) <= 0).select(*gcols)
-    res = agg_table.merge(upserts, deletes, epoch_id=epoch_id)
-    res["recomputed_groups"] = recomputed
+                    s2 = [
+                        F.slice(
+                            _sorted_dir(F.flatten(F.collect_list(f"_p_{a}")), lo), 1, reserve_r
+                        ).alias(f"_rcv_{a}")
+                        for b, a, lo in dirs
+                    ]
+                    rc = (
+                        scoped.groupBy(*gcols, F.spark_partition_id().alias("_slt"))
+                        .agg(*s1)
+                        .groupBy(*gcols)
+                        .agg(*s2)
+                    )
+                    take_rc = []
+                    for _b, a, _lo in dirs:
+                        take_rc += [
+                            F.when(F.col("_rc"), F.get(F.col(f"_rcv_{a}"), 0))
+                            .otherwise(F.col(a))
+                            .alias(a),
+                            F.when(F.col("_rc"), F.col(f"_rcv_{a}"))
+                            .otherwise(F.col(f"_rsv_{a}"))
+                            .alias(f"_rsv_{a}"),
+                        ]
+                    replaced = {a for _, a, _ in dirs} | {f"_rsv_{a}" for _, a, _ in dirs}
+                else:
+                    rc = scoped.groupBy(*gcols).agg(
+                        *[F.min(b).alias(f"_rc_{a}") for b, a in min_map.items()],
+                        *[F.max(b).alias(f"_rc_{a}") for b, a in max_map.items()],
+                    )
+                    take_rc = [
+                        F.when(F.col("_rc"), F.col(f"_rc_{a}")).otherwise(F.col(a)).alias(a)
+                        for a in [*min_map.values(), *max_map.values()]
+                    ]
+                    replaced = {*min_map.values(), *max_map.values()}
+                keep = [c for c in updated.columns if c not in replaced]
+                updated = updated.join(F.broadcast(rc), on=gcols, how="left").select(*keep, *take_rc)
+        # an aggregate table never holds empty groups (a from-scratch GROUP
+        # BY has no row for them)
+        return updated.filter(F.col(count_col) > 0).drop("_rc")
+
+    res = agg_table.rewrite_buckets(deltas, combine, epoch_id)
+    res["recomputed_groups"] = stats["recomputed"]
     if metrics is not None:
         # the maintenance-cost gauges (r5 verdict item 7): a climbing total
         # is the dashboard signal that reserves are exhausting
@@ -527,15 +533,9 @@ def apply_agg_deltas(
             IVM_RECOMPUTED_GROUPS_TOTAL,
         )
 
-        metrics.set(IVM_RECOMPUTED_GROUPS, float(recomputed))
-        if recomputed:
-            metrics.inc(IVM_RECOMPUTED_GROUPS_TOTAL, float(recomputed))
-    # no-silent-caps: whether the probe's key values reached the parquet
-    # row-group scan as an IN pushdown, or only the bucket filter applied
-    # (probe set past the cap) — a consumer can watch the IO-cliff boundary
-    if probe_stats:
-        res["probe_key_pushdown"] = probe_stats.get("key_pushdown")
-        res["probe_buckets"] = probe_stats.get("probed_buckets")
+        metrics.set(IVM_RECOMPUTED_GROUPS, float(stats["recomputed"]))
+        if stats["recomputed"]:
+            metrics.inc(IVM_RECOMPUTED_GROUPS_TOTAL, float(stats["recomputed"]))
     return res
 
 
@@ -560,9 +560,9 @@ def maintain_agg(
     Aggregate columns are ``count_col`` + ``{sum_prefix}<c>`` /
     ``{min_prefix}<c>`` / ``{max_prefix}<c>`` per aggregated column. Total
     cost is O(changed): changelog read (manifest-pruned) -> one partial-agg
-    shuffle -> pruned probe + keyed merge — plus, for MIN/MAX only, the
-    bounded recompute scan on the (rare) epochs that retract a group's
-    stored extremum without re-establishing it.
+    shuffle -> one read and one write of the touched view buckets — plus,
+    for MIN/MAX only, the bounded recompute scan on the (rare) epochs that
+    retract a group's stored extremum without re-establishing it.
 
     ``reserve_r=R > 0`` adds the per-group extrema reserve (module
     docstring): MIN/MAX retractions consume the reserve and the recompute

@@ -662,7 +662,9 @@ class CdcPipeline:
     def run_batch_replay(self, source_dir: str, epoch_id: str = "batch-0") -> None:
         """Finite/backfill mode (dcp_event_handler.go:29-34): fold the whole
         log in one shot and overwrite the table — fastest cold-start path
-        (one shuffle, no per-epoch overhead)."""
+        (one shuffle, no per-epoch overhead). Commits the checkpoint and
+        the replay epoch's lineage rows, like ``apply_batch``."""
+        t0 = time.time()
         read_fn = read_change_log_json if self.source_format == "json" else read_change_log
         events = read_fn(self.spark, source_dir)
         if CORRUPT_COL in events.columns:
@@ -691,18 +693,38 @@ class CdcPipeline:
         final = winners.filter(F.col("op") == OP_MUTATION).select(*KEY_COLS, *PAYLOAD_COLS)
         table = self.tables[DEFAULT_TARGET]
         # the fold output is hash-partitioned by key: bucket-aligned write
-        table.overwrite(final, epoch_id=epoch_id, aligned=True)
+        res = table.overwrite(final, epoch_id=epoch_id, aligned=True)
         # checkpoint = max seqno per partition over ROLLBACK-SURVIVING events
         # only (truncate-then-advance, matching the sequential oracle). Using
         # the raw max would exceed the replayed branch's re-sequenced max and
         # make a resuming stream silently drop legitimate post-rollback
         # events with seqno in (new_branch_max, old_branch_max] as dupes.
-        hwm = (
+        # The epoch's lineage stats ride the same aggregate: a replay has no
+        # committed HWM to drop duplicates against, so every surviving event
+        # counts under its op.
+        op = F.col("op")
+        stats_pd = (
             live.groupBy("partition_id")
-            .agg(F.max("seqno").alias("hwm_seqno"))
+            .agg(
+                F.min("seqno").alias("first_seqno"),
+                F.max("seqno").alias("last_seqno"),
+                F.sum(F.when(op == "mutation", 1).otherwise(0)).alias("n_mutations"),
+                F.sum(F.when(op == "deletion", 1).otherwise(0)).alias("n_deletions"),
+                F.sum(F.when(op == "expiration", 1).otherwise(0)).alias("n_expirations"),
+            )
             .toPandas()
         )
-        self.checkpoints.commit(hwm, f"{self.run_id}:{epoch_id}")
+        epoch_key = f"{self.run_id}:{epoch_id}"
+        hwm = stats_pd[["partition_id", "last_seqno"]].rename(columns={"last_seqno": "hwm_seqno"})
+        self.checkpoints.commit(hwm, epoch_key)
+        lin = stats_pd.copy()
+        lin["n_duplicates_dropped"] = 0
+        lin["commit_epoch"] = int(epoch_id) if str(epoch_id).lstrip("-").isdigit() else -1
+        lin["n_merged"] = res["rows"]
+        lin["batch_latency_ms"] = int((time.time() - t0) * 1000)
+        for c in ("n_mutations", "n_deletions", "n_expirations"):
+            lin[c] = lin[c].astype("int64")
+        self.lineage.append(lin, epoch_key)
 
     def read_table(self, name: str = DEFAULT_TARGET) -> DataFrame:
         return self.tables[name].read()

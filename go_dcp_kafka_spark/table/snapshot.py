@@ -25,7 +25,8 @@ real ``MERGE INTO`` (see ``iceberg_merge_sql`` below).
    manifest; a re-delivered epoch (Spark retries the whole micro-batch after
    a crash) is detected and skipped => exactly-once table state.
 4. **Schema evolution** — merges may add columns mid-stream; existing rows
-   read back with nulls (parquet mergeSchema + unionByName allowMissingColumns).
+   read back with nulls (every read, deltas included, requests the recorded
+   manifest schema, so there is no footer-merging ``mergeSchema`` pass).
 
 Versions are retained (time-travel-lite) until ``expire_snapshots``.
 
@@ -51,6 +52,7 @@ import re
 import shutil
 import threading
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Any
 
@@ -154,6 +156,11 @@ def _wider_type(a: T.DataType, b: T.DataType) -> bool:
     if ra is None or rb is None:
         return False
     return (ra // 10 == rb // 10) and ra > rb
+
+
+#: The upsert/delete marker column delta files carry beside the manifest
+#: schema's columns ('u' or 'd').
+_OP_FIELD = T.StructField("_op", T.StringType())
 
 
 def _est_row_bytes(schema: T.StructType) -> int:
@@ -553,9 +560,11 @@ class SnapshotTable:
                 return None
         return phys
 
-    def _read_dirs(self, m: dict, dirs: list[str]) -> DataFrame:
-        """Read base bucket dirs with the manifest schema (backfills evolved
-        columns with nulls, skips the per-file footer-merge pass). With
+    def _read_dirs(self, m: dict, dirs: list[str], extra: tuple[T.StructField, ...] = ()) -> DataFrame:
+        """Read bucket dirs with the manifest schema (backfills evolved
+        columns with nulls, upcasts files written before a type widening,
+        skips the per-file footer-merge pass). ``extra`` appends fields the
+        manifest schema does not carry — delta dirs pass ``_OP_FIELD``. With
         committed ``rename_column`` ops, dirs written before a rename are
         read under their era's physical names and aliased to current —
         grouped by era mapping, so the common all-current case stays ONE
@@ -566,10 +575,10 @@ class SnapshotTable:
             )
             if schema is None:
                 raise ValueError("empty table with no schema recorded")
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], T.StructType([*schema.fields, *extra]))
         if not m.get("schema"):
             return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = T.StructType([*T.StructType.fromJson(json.loads(m["schema"])).fields, *extra])
         renames = m.get("renames") or []
         if not renames:
             return self.spark.read.schema(schema).parquet(*dirs)
@@ -616,14 +625,8 @@ class SnapshotTable:
         delta_dfs = []
         for ver, bd in deltas_e:
             sel = sorted(d for b, d in bd.items() if b in bset)
-            if not sel:
-                continue
-            # mergeSchema here, not the manifest schema: delta files carry
-            # the extra _op marker column the manifest schema excludes
-            df = self.spark.read.option("mergeSchema", "true").parquet(*sel)
-            if ver is not None:
-                df = df.withColumn("_v", F.lit(ver))
-            delta_dfs.append(df)
+            if sel:
+                delta_dfs.append(self._read_dirs(m, sel, (_OP_FIELD,)).withColumn("_v", F.lit(ver)))
         tdirs = [
             os.path.join(self.path, m["buckets"][str(b)])
             for b in buckets
@@ -778,19 +781,94 @@ class SnapshotTable:
         return state.join(F.broadcast(kdf), on=list(self.key_cols), how="left_semi")
 
     def _read_buckets(self, m: dict, buckets: list[int]) -> DataFrame | None:
-        dirs = sorted({m["buckets"][str(b)] for b in buckets if str(b) in m["buckets"]})
-        dirs = [os.path.join(self.path, d) for d in dirs]
-        if not dirs:
+        """Current base rows of exactly ``buckets`` (every manifest entry
+        names one bucket dir) through the manifest-schema read: an empty
+        frame when none of them has files yet, None only when the table has
+        neither files nor a recorded schema."""
+        dirs = [os.path.join(self.path, m["buckets"][str(b)]) for b in buckets if str(b) in m["buckets"]]
+        if not dirs and not m.get("schema") and self._default_schema is None:
             return None
-        # manifest-schema (+ rename-era-aware) read via _read_dirs
-        df = self._read_dirs(m, dirs)
-        # a version dir holds several buckets; prune to exactly the touched ones
-        return df.withColumn("_b", _bucket_expr(self.key_cols, m["num_buckets"])).filter(
-            F.col("_b").isin(buckets)
-        ).drop("_b")
+        return self._read_dirs(m, dirs)
 
     # ---------------- merge ----------------
     @_locked
+    def rewrite_buckets(
+        self,
+        changes: DataFrame,
+        combine: Callable[[DataFrame | None, DataFrame, int], DataFrame],
+        epoch_id: str,
+    ) -> dict[str, Any]:
+        """Copy-on-write rewrite of the buckets ``changes`` touches — the one
+        write path of ``merge`` and of keyed view maintenance
+        (operators/ivm.py). One read of the touched buckets, one write, one
+        manifest commit:
+
+        - ``changes`` (any frame carrying the key columns) is materialized
+          ONCE with a ``_bucket`` column (``localCheckpoint``); the touched-
+          bucket set and its row count ride that same job as an
+          ``Observation``, so there is no bucket-count job and ``combine``
+          never re-runs the plan behind ``changes``.
+        - ``combine(current, changes, n_changes)`` returns the new full
+          contents of the touched buckets. ``current`` is their present
+          rows (see ``_read_buckets``: empty frame for buckets without
+          files, None for a table with neither files nor schema). Every row
+          it returns must hash to a touched bucket — rows taken from
+          ``current`` or ``changes`` do; a bucket it leaves empty drops out
+          of the manifest.
+
+        Idempotent per ``epoch_id``. Outstanding MOR deltas are compacted
+        first: a rewrite over them would resurrect overwritten rows."""
+        from pyspark.sql import Observation
+
+        epoch_id = str(epoch_id)
+        m = self._load_manifest()
+        if self._is_epoch_committed(m, epoch_id):
+            return {"skipped": True, "epoch": epoch_id, "version": m["version"]}
+        if m.get("deltas"):
+            self.compact()
+            m = self._load_manifest()
+        bexpr = _bucket_expr(self.key_cols, m["num_buckets"])
+        obs = Observation()
+        changes = (
+            self._align_key_types(changes, m)
+            .withColumn("_bucket", bexpr)
+            .observe(obs, F.collect_set("_bucket").alias("touched"), F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True)
+        )
+        touched = sorted(obs.get["touched"] or [])
+        n_changes = int(obs.get["rows"] or 0)
+        combined = combine(self._read_buckets(m, touched), changes, n_changes).withColumn("_bucket", bexpr)
+        new_version = m["version"] + 1
+        rel_dir = self._new_data_dir(new_version)
+        if touched:
+            (
+                self._maybe_sorted(combined.repartition(len(touched), F.col("_bucket")))
+                .write.option("compression", self.compression).partitionBy("_bucket")
+                .mode("overwrite")
+                .parquet(os.path.join(self.path, rel_dir))
+            )
+        for b in touched:
+            bdir = os.path.join(rel_dir, f"_bucket={b}")
+            if os.path.isdir(os.path.join(self.path, bdir)):
+                m["buckets"][str(b)] = bdir
+            else:
+                m["buckets"].pop(str(b), None)  # bucket emptied
+        m["version"] = new_version
+        # widen the recorded schema with the output's — never replace: a
+        # batch that misses an evolved column (or touches only empty
+        # buckets) must not erase that column from future reads, which
+        # trust the recorded schema (r4 review finding)
+        m["schema"] = self._merge_schema_json(m, combined.drop("_bucket").schema)
+        self._record_epoch(m, epoch_id, new_version)
+        self._commit_manifest(m)
+        return {
+            "skipped": False,
+            "epoch": epoch_id,
+            "version": new_version,
+            "touched_buckets": touched,
+            "n_changes": n_changes,
+        }
+
     def merge(
         self,
         upserts: DataFrame,
@@ -801,83 +879,38 @@ class SnapshotTable:
         """MERGE INTO semantics: rows in ``upserts`` replace target rows with
         the same key (full-document replacement, like a DCP mutation carrying
         the whole doc); keys in ``delete_keys`` are removed
-        (WHEN MATCHED AND op='deletion' THEN DELETE). Returns commit stats.
-        """
-        epoch_id = str(epoch_id)
-        m = self._load_manifest()
-        if self._is_epoch_committed(m, epoch_id):
-            return {"skipped": True, "epoch": epoch_id, "version": m["version"]}
-        if m.get("deltas"):
-            # COW over outstanding MOR deltas would resurrect overwritten
-            # rows; fold them into the base first
-            self.compact()
-            m = self._load_manifest()
+        (WHEN MATCHED AND op='deletion' THEN DELETE). Returns commit stats,
+        ``n_upserts`` being upsert rows + delete keys.
 
-        bexpr = _bucket_expr(self.key_cols, self.num_buckets)
-        upserts = self._align_key_types(upserts, m).withColumn("_bucket", bexpr)
-        keys = upserts.select(*self.key_cols, "_bucket")
+        A ``rewrite_buckets`` whose ``combine`` anti-joins the touched
+        buckets with the epoch's keys and appends the upserts. ``n_updates``
+        is accepted for call compatibility and ignored: the rewrite's own
+        row count decides whether the keys are broadcast."""
+        keys = list(self.key_cols)
+        changes = upserts.withColumn("_op", F.lit("u"))
         if delete_keys is not None:
-            delete_keys = self._align_key_types(delete_keys, m)
-            keys = keys.unionByName(delete_keys.withColumn("_bucket", bexpr).select(*self.key_cols, "_bucket"))
-        keys = keys.persist()
-        try:
-            # ONE job yields both the touched-bucket set and the update-row
-            # count (when inputs are LWW winners, rows == distinct keys ==
-            # the epoch's merged-key count — saves the runner a count job)
-            bucket_counts = keys.groupBy("_bucket").count().collect()
-            touched = sorted(r["_bucket"] for r in bucket_counts)
-            n_upserts = int(sum(r["count"] for r in bucket_counts))
-            new_version = m["version"] + 1
-            rel_dir = self._new_data_dir(new_version)
-            out_dir = os.path.join(self.path, rel_dir)
+            changes = changes.unionByName(
+                delete_keys.select(*keys).withColumn("_op", F.lit("d")), allowMissingColumns=True
+            )
 
-            current = self._read_buckets(m, touched)
-            if current is not None:
-                # an epoch's update keys are bounded by the micro-batch size;
-                # broadcasting them turns the anti-join into a map-side probe
-                # (no shuffle of the target table). Above the byte budget,
-                # fall back to a shuffled join (AQE may still pick broadcast).
-                join_keys = (
-                    F.broadcast(keys) if _should_broadcast_keys(keys.schema, n_updates) else keys
-                )
-                kept = current.withColumn("_bucket", bexpr).join(
-                    join_keys, on=[*self.key_cols, "_bucket"], how="left_anti"
-                )
-                combined = kept.unionByName(upserts, allowMissingColumns=True)
-            else:
-                combined = upserts
-            if touched:
-                (
-                    self._maybe_sorted(combined.repartition(max(len(touched), 1), F.col("_bucket")))
-                    .write.option("compression", self.compression).partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(out_dir)
-                )
-            # widen the recorded schema with this batch's — never replace:
-            # a batch that misses an evolved column (or touches only empty
-            # buckets) must not erase that column from future reads, which
-            # trust the recorded schema (r4 review finding)
-            schema_now_json = self._merge_schema_json(m, combined.drop("_bucket").schema)
+        def combine(current: DataFrame | None, ch: DataFrame, n_changes: int) -> DataFrame:
+            upserted = ch.filter(F.col("_op") == "u").drop("_op", "_bucket")
+            if current is None:
+                return upserted
+            # an epoch's keys are bounded by the micro-batch size;
+            # broadcasting them turns the anti-join into a map-side probe
+            # (no shuffle of the target buckets). Above the byte budget the
+            # join stays shuffled (AQE may still pick broadcast).
+            ks = ch.select(*keys)
+            if _should_broadcast_keys(ks.schema, n_changes):
+                ks = F.broadcast(ks)
+            kept = current.join(ks, on=keys, how="left_anti")
+            return kept.unionByName(upserted, allowMissingColumns=True)
 
-            for b in touched:
-                bdir = os.path.join(rel_dir, f"_bucket={b}")
-                if os.path.isdir(os.path.join(self.path, bdir)):
-                    m["buckets"][str(b)] = bdir
-                else:
-                    m["buckets"].pop(str(b), None)  # bucket emptied by deletes
-            m["version"] = new_version
-            m["schema"] = schema_now_json
-            self._record_epoch(m, epoch_id, new_version)
-            self._commit_manifest(m)
-            return {
-                "skipped": False,
-                "epoch": epoch_id,
-                "version": new_version,
-                "touched_buckets": touched,
-                "n_upserts": n_upserts,
-            }
-        finally:
-            keys.unpersist()
+        res = self.rewrite_buckets(changes, combine, epoch_id)
+        if "n_changes" in res:
+            res["n_upserts"] = res.pop("n_changes")
+        return res
 
     @_locked
     def merge_mor(
@@ -1067,7 +1100,8 @@ class SnapshotTable:
         m["schema"] = df.schema.json()
         self._record_epoch(m, str(epoch_id), new_version)
         self._commit_manifest(m)
-        return {"version": new_version}
+        # row count from the written files' footers: driver-side, no job
+        return {"version": new_version, "rows": _parquet_footer_rows(out_dir)}
 
     def _manifest_at(self, version: int) -> dict[str, Any]:
         p = self._vfile(version)
@@ -1163,27 +1197,19 @@ class SnapshotTable:
         pushdown (sorted buckets skip to matching row groups). This is the
         reference's consumers-read-only-the-appended-log-segment cost model
         (/root/reference/kafka/client.go:220-233) realized on the table."""
-        delta_dfs = []
+        # read under the NEW manifest schema: delta files missing an evolved
+        # column read it as null (full-row-replace semantics), files written
+        # before a type widening upcast
+        allr = None
         for ver, bd in appended:
-            df = self.spark.read.option("mergeSchema", "true").parquet(*sorted(bd.values()))
-            delta_dfs.append(df.withColumn("_v", F.lit(ver)))
-        allr = delta_dfs[0]
-        for df in delta_dfs[1:]:
-            allr = allr.unionByName(df, allowMissingColumns=True)
-        # final payload shape: the NEW manifest schema minus keys — delta
-        # files may be narrower (missed evolved columns => null in the new
-        # state, full-row-replace semantics) or carry pre-widening types
+            df = self._read_dirs(new_m, sorted(bd.values()), (_OP_FIELD,)).withColumn("_v", F.lit(ver))
+            allr = df if allr is None else allr.unionByName(df)
         schema = T.StructType.fromJson(json.loads(new_m["schema"]))
         payload = [f.name for f in schema.fields if f.name not in self.key_cols]
         types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        dcols = set(allr.columns)
-        aligned = [
-            (F.col(c).cast(types[c]) if c in dcols else F.lit(None).cast(types[c])).alias(c)
-            for c in payload
-        ]
         winners = (
             allr.groupBy(*self.key_cols)
-            .agg(F.max_by(F.struct(F.col("_op"), *aligned), F.col("_v")).alias("w"))
+            .agg(F.max_by(F.struct(F.col("_op"), *[F.col(c) for c in payload]), F.col("_v")).alias("w"))
             .select(
                 *self.key_cols,
                 F.col("w._op").alias("_op"),

@@ -48,3 +48,21 @@ def assert_frames_equal(actual: pd.DataFrame, expected: pd.DataFrame):
             av, ev = pd.to_datetime(av), pd.to_datetime(ev)
         mism = (av.fillna("∅") != ev.fillna("∅")) if av.dtype == object else (av != ev) & ~(av.isna() & ev.isna())
         assert not mism.any(), f"column {col}: {int(mism.sum())} mismatches; first at\n{a[mism].head(3)}\nvs\n{e[mism].head(3)}"
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``: the jobs are tagged with a
+    job tag and read back from the status tracker once the listener bus has
+    delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"count-jobs-{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(list(jsc.statusTracker().getJobIdsForTag(tag)))

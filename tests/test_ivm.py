@@ -662,25 +662,23 @@ def test_ivm_reserve_absorbs_extremum_deletions(spark, tmp_path):
     assert {x["g"]: list(x["_rsv_min_x"]) for x in agg.read().collect()}["g1"] == [7, 9]
 
 
-def test_ivm_reserve_probe_pushdown_reported(spark, tmp_path):
-    """No-silent-caps (r5 verdict item 8): the maintenance return dict
-    discloses whether the read_keys probe kept the row-group IN pushdown
-    (small epochs) or fell back to bucket-only pruning (probe set past the
-    1024-key cap)."""
+def test_ivm_refresh_reports_touched_buckets(spark, tmp_path):
+    """The refresh reads and rewrites only the view buckets its deltas
+    touch, and says which: one changed group rewrites one bucket; an epoch
+    changing more than 1024 groups (past any point-lookup cap) rewrites
+    every bucket and still folds exactly."""
     base = SnapshotTable(spark, str(tmp_path / "b"), ("k",), num_buckets=4)
     rows = [(i, f"g{i}", i, "t") for i in range(1100)]  # one group per row
     base.overwrite(spark.createDataFrame(rows, "k long, g string, x long, txt string"), epoch_id="b0")
     agg = SnapshotTable(spark, str(tmp_path / "a"), ("g",), num_buckets=4)
     agg.overwrite(bootstrap_agg(base.read(), ["g"], sum_cols=["x"]), epoch_id="a0")
-    # small epoch: pushdown active
     v = base.version()
     base.merge_mor(
         spark.createDataFrame([(1, "g1", 999, "u")], "k long, g string, x long, txt string"),
         None, epoch_id="e1", n_updates=1,
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m1")
-    assert r["probe_key_pushdown"] is True and r["probe_buckets"] <= 2
-    # epoch touching >1024 groups: pushdown reported OFF (bucket filter only)
+    assert len(r["touched_buckets"]) == 1, r
     v = base.version()
     base.merge(
         spark.createDataFrame(
@@ -690,7 +688,7 @@ def test_ivm_reserve_probe_pushdown_reported(spark, tmp_path):
         None, epoch_id="e2", n_updates=1100,
     )
     r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m2")
-    assert r["probe_key_pushdown"] is False
+    assert r["touched_buckets"] == [0, 1, 2, 3], r
     got = {x["g"]: x["sum_x"] for x in agg.read().collect()}
     want = {x["g"]: x["s"] for x in base.read().groupBy("g").agg(
         F.coalesce(F.sum("x"), F.lit(0)).alias("s")).collect()}
@@ -738,3 +736,86 @@ def test_ivm_reserve_property_random_epochs(spark, tmp_path_factory, eps):
         )
         got = _mm_state(agg.read().select("g", "n_rows", "sum_x", "min_x", "max_x"))
         assert got == _mm_state(_mm_scratch(base)), f"diverged at epoch {i}: {eps}"
+
+
+def _bootstrapped(base) -> dict:
+    return {
+        r["g"]: (r["n_rows"], r["sum_x"])
+        for r in bootstrap_agg(base.read(), ["g"], sum_cols=["x"]).collect()
+    }
+
+
+def _view_bucket(spark, agg, groups: list[str]) -> dict[str, int]:
+    from go_dcp_kafka_spark.table.snapshot import _bucket_expr
+
+    df = spark.createDataFrame([(g,) for g in groups], "g string")
+    return {r["g"]: r["b"] for r in df.select("g", _bucket_expr(("g",), agg.num_buckets).alias("b")).collect()}
+
+
+def test_maintain_agg_job_count(spark, tmp_path):
+    """One refresh of a small COUNT/SUM view after one MOR epoch: the
+    changelog read, the delta aggregate and ONE read + write of the touched
+    view buckets, 11 jobs on local[4]. A probe-then-merge refresh of the
+    same view runs 22 (the probe's key collect, the merge's bucket-count
+    job, and the delta plan re-run under each)."""
+    from tests.conftest import count_jobs
+
+    base = _base(spark, tmp_path)
+    agg = SnapshotTable(spark, str(tmp_path / "agg"), ("g",), num_buckets=4)
+    agg.overwrite(bootstrap_agg(base.read(), ["g"], sum_cols=["x"]), epoch_id="a0")
+    v = base.version()
+    base.merge_mor(
+        spark.createDataFrame([(1, "g2", 111, "u"), (70, "g0", 5, "i")], ["k", "g", "x", "txt"]),
+        spark.createDataFrame([(4,)], ["k"]),
+        epoch_id="e1",
+    )
+    res, jobs = count_jobs(spark, lambda: maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m1"))
+    assert not res["skipped"]
+    assert jobs <= 11, f"maintain_agg ran {jobs} Spark jobs"
+    assert _maintained(agg) == _bootstrapped(base)
+
+
+def test_refresh_bucket_edge_cases(spark, tmp_path):
+    """The bucket rewrite at its edges, each checked against a from-scratch
+    bootstrap: a refresh that deletes every group of one view bucket (the
+    bucket leaves the manifest, later refreshes and reads still work); one
+    that creates a group in a bucket with no files yet (after a COW merge
+    of the base); and a re-delivered refresh, skipped."""
+    base = SnapshotTable(spark, str(tmp_path / "base"), ("k",), num_buckets=4)
+    rows = [(i, f"g{i % 3}", i, "t") for i in range(30)]
+    base.overwrite(spark.createDataFrame(rows, "k long, g string, x long, txt string"), epoch_id="b0")
+    agg = SnapshotTable(spark, str(tmp_path / "agg"), ("g",), num_buckets=8)
+    agg.overwrite(bootstrap_agg(base.read(), ["g"], sum_cols=["x"]), epoch_id="a0")
+    names = [f"g{i}" for i in range(40)]
+    bucket = _view_bucket(spark, agg, names)
+    filled = {bucket[g] for g in ("g0", "g1", "g2")}
+    assert len(filled) > 1, "fixture: the three groups must span several view buckets"
+
+    # 1. every group of g0's bucket loses all its rows (MOR epoch)
+    gone = bucket["g0"]
+    dead = [(i,) for i, g, _x, _t in rows if bucket[g] == gone]
+    v = base.version()
+    base.merge_mor(spark.createDataFrame([], "k long, g string, x long, txt string"),
+                   spark.createDataFrame(dead, "k long"), epoch_id="e1")
+    r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m1")
+    assert r["touched_buckets"] == [gone]
+    assert str(gone) not in agg._load_manifest()["buckets"]
+    assert _maintained(agg) == _bootstrapped(base)
+
+    # 2. a new group hashing to a bucket with no files (COW epoch)
+    empty = sorted(set(range(8)) - {bucket[g] for g in ("g0", "g1", "g2")} - {gone})[0]
+    new_g = next(g for g in names if bucket[g] == empty)
+    v = base.version()
+    base.merge(spark.createDataFrame([(100, new_g, 7, "i"), (101, new_g, 8, "i"), (3, "g0", 3, "u")],
+                                     "k long, g string, x long, txt string"), None, epoch_id="e2")
+    r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m2")
+    assert sorted(r["touched_buckets"]) == sorted({empty, gone})
+    assert str(empty) in agg._load_manifest()["buckets"]
+    assert _maintained(agg)[new_g] == (2, 15)
+    assert _maintained(agg) == _bootstrapped(base)
+
+    # 3. the same refresh re-delivered: skipped, nothing written
+    version = agg.version()
+    r = maintain_agg(base, agg, v, ["g"], ["x"], epoch_id="m2")
+    assert r["skipped"] and agg.version() == version
+    assert _maintained(agg) == _bootstrapped(base)

@@ -188,6 +188,56 @@ def test_type_widening_int_to_long(spark, tmp_path):
     assert ch == {1: (5_000_000_000, "update")}
 
 
+def test_delta_reads_use_manifest_schema(spark, tmp_path):
+    """Delta files are read under the manifest schema (plus ``_op``), not
+    by a footer-merging ``mergeSchema`` pass: assembling a read plan runs
+    no Spark job, and deltas written before an added column, before a type
+    widening and before a rename all read back right through ``read``,
+    ``read_keys``, both ``read_changes`` paths and time travel."""
+    from pyspark.sql import types as T
+
+    from go_dcp_kafka_spark.table.snapshot import SnapshotTable
+    from tests.conftest import count_jobs
+
+    def frame(rows, **cols):
+        return spark.createDataFrame(rows, T.StructType([T.StructField(c, t) for c, t in cols.items()]))
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), ("k",), num_buckets=4)
+    t.overwrite(frame([(i, f"v{i}", i) for i in range(20)], k=T.LongType(), v=T.StringType(), x=T.IntegerType()),
+                epoch_id="b0")
+    v0 = t.version()
+    # written before the column add and the widening: x INT, no w
+    t.merge_mor(frame([(3, "n3", 30)], k=T.LongType(), v=T.StringType(), x=T.IntegerType()), None, epoch_id="d1")
+    v1 = t.version()
+    t.merge_mor(
+        frame([(4, "n4", 5_000_000_000, "extra")], k=T.LongType(), v=T.StringType(), x=T.LongType(), w=T.StringType()),
+        None, epoch_id="d2",
+    )
+    out, jobs = count_jobs(spark, t.read)
+    assert jobs == 0, f"building the read plan ran {jobs} Spark jobs"
+    assert dict(out.dtypes)["x"] == "bigint"
+    want = {3: ("n3", 30, None), 4: ("n4", 5_000_000_000, "extra"), 5: ("v5", 5, None)}
+    got = {r["k"]: (r["v"], r["x"], r["w"]) for r in out.collect()}
+    assert len(got) == 20 and {k: got[k] for k in want} == want
+    keys = spark.createDataFrame([(3,), (4,), (5,)], "k long")
+    assert {r["k"]: (r["v"], r["x"], r["w"]) for r in t.read_keys(keys).collect()} == want
+    # appended-delta path (both deltas, then only the second)
+    ch = {r["k"]: (r["_change"], r["x"], r["_before"]["x"]) for r in t.read_changes(v0, include_old=True).collect()}
+    assert ch == {3: ("update", 30, 3), 4: ("update", 5_000_000_000, 4)}
+    ch = {r["k"]: (r["_change"], r["_before"]["x"]) for r in t.read_changes(v1, include_old=True).collect()}
+    assert ch == {4: ("update", 4)}
+    # a delta written before a rename: fold, rename, then a new-name delta
+    t.compact()
+    t.rename_column("v", "val")
+    t.merge_mor(frame([(5, "n5", 55, None)], k=T.LongType(), val=T.StringType(), x=T.LongType(), w=T.StringType()),
+                None, epoch_id="d3")
+    assert {r["k"]: r["v"] for r in t.read(version=v1).collect()}[3] == "n3"  # pre-rename delta, old name
+    ch = {r["k"]: (r["_change"], r["val"]) for r in t.read_changes(v1).collect()}
+    assert ch == {4: ("update", "n4"), 5: ("update", "n5")}
+    got = {r["k"]: (r["val"], r["x"], r["w"]) for r in t.read().collect()}
+    assert got[3] == ("n3", 30, None) and got[5] == ("n5", 55, None) and got[6] == ("v6", 6, None)
+
+
 def test_legacy_string_delta_entries_resolve_in_append_order(spark, tmp_path):
     """Pre-dict manifest format (plain dir strings, no LWW version): list
     position stands in for the version — the latest delta must WIN, not

@@ -120,6 +120,35 @@ def test_batch_replay_equals_streaming(spark, stream_case, tmp_path):
     assert_frames_equal(actual, stream_case["expected"])
 
 
+def test_batch_replay_writes_lineage(spark, stream_case, tmp_path):
+    """run_batch_replay commits the replay epoch's lineage rows with its
+    checkpoint: the per-partition op counts sum to the rollback-surviving
+    events delivered, and each partition's last_seqno is its HWM."""
+    ev = stream_case["res"].events
+    surviving = ev[ev["op"] != "rollback"]
+    for rb in ev[ev["op"] == "rollback"].itertuples():
+        surviving = surviving[
+            ~(
+                (surviving["partition_id"] == rb.partition_id)
+                & (surviving["seqno"] > rb.rollback_point)
+                & (surviving["delivery_seq"] < rb.delivery_seq)
+            )
+        ]
+    assert len(surviving) < (ev["op"] != "rollback").sum(), "fixture must roll events back"
+    pipe = _fresh_pipeline(spark, tmp_path)
+    pipe.run_batch_replay(stream_case["dir"])
+    lin = pipe.lineage.read()
+    assert sorted(lin["partition_id"]) == sorted(surviving["partition_id"].unique())
+    want = surviving.groupby("op").size()
+    for op, col in (("mutation", "n_mutations"), ("deletion", "n_deletions"), ("expiration", "n_expirations")):
+        assert int(lin[col].sum()) == int(want.get(op, 0)), col
+    assert int(lin[["n_mutations", "n_deletions", "n_expirations"]].sum().sum()) == len(surviving)
+    assert dict(zip(lin["partition_id"].astype(int), lin["last_seqno"].astype(int))) == (
+        pipe.checkpoints.hwm_map()
+    )
+    assert (lin["n_merged"] == len(stream_case["expected"])).all()
+
+
 def test_byte_threshold_trigger(spark, stream_case, tmp_path):
     """A1 parity: the reference flushes at N messages OR M bytes
     (producer_batch.go:54-61). The size knob must admit the log over

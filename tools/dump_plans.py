@@ -215,9 +215,9 @@ def main() -> None:
         "(four extra null-skipping min/max expressions per column, no "
         "second shuffle); its bounded recompute scan appears only on epochs "
         "that retract a stored extremum without re-establishing it. "
-        "Downstream, apply_agg_deltas probes the aggregate table with the "
-        "pruned read_keys path and merges keyed (touched buckets only): "
-        "O(changed) view maintenance.",
+        "Downstream, apply_agg_deltas folds the deltas into the aggregate "
+        "table with one read and one rewrite of the touched view buckets "
+        "(rewrite_buckets): O(changed) view maintenance.",
     )
 
     cap(
@@ -306,7 +306,7 @@ def main() -> None:
         "−1, then the SAME partial+final HashAggregate pair as the group-"
         "delta plan above — a stopword's ±1s combine map-side. The trailing "
         "Filter drops net-zero words (an edit keeping a word), so "
-        "apply_agg_deltas' probe/merge never touches their groups: the "
+        "apply_agg_deltas' bucket rewrite never touches their groups: the "
         "common small-edit epoch maintains a 10^8-word vocabulary by "
         "touching a handful of word rows.",
     )
